@@ -146,7 +146,7 @@ def dot_product_seq_pandas(a: Column, b: Column) -> Column:
 # string that round-trips to the same IEEE-754 bits, and the SQL
 # parser's ``Double.parseDouble`` is correctly rounded — so the parsed
 # Literal is bit-identical to ``F.lit(x)``'s. Pinned by
-# tests/test_functions.py::test_lit_double_array_matches_per_element.
+# tests/test_properties.py::test_lit_array_helpers_match_per_element.
 
 _LONG_MIN = -(2**63)
 
@@ -160,7 +160,11 @@ def _sql_double(x: float) -> str:
 
 
 def lit_double_array(vals) -> Column:
-    """``ARRAY<DOUBLE>`` literal in one py4j round-trip (see above)."""
+    """``ARRAY<DOUBLE>`` literal in one py4j round-trip (see above).
+
+    Fails loudly: a NaN or infinite element raises ValueError at plan
+    construction (SQL text has no finite spelling for it), unlike the
+    per-element ``F.lit`` form, which would embed it silently."""
     vals = list(vals)
     if not vals:
         return F.array().cast("array<double>")

@@ -68,6 +68,8 @@ def kmeans_assign(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
+    from gpu_accelerated_vector_indexing_spark.functions.vector import lit_double_array
+
     if fit_sample is None:
         # a real Spark job, not a metadata shortcut: emb is often a
         # derived frame (refshape projection, filtered slices), so this
@@ -95,7 +97,7 @@ def kmeans_assign(
         rows = [
             F.struct(
                 F.lit(i).alias("cluster"),
-                F.array(*[F.lit(float(x)) for x in c]).cast("array<double>").alias("centroid"),
+                lit_double_array(c).alias("centroid"),
             )
             for i, c in enumerate(centers)
         ]

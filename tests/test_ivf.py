@@ -404,6 +404,34 @@ def test_driver_coarse_probes_match_dataframe_coarse(spark):
             assert df_probes == sorted(coarse_probes(spark, SF_CORRECT, qid, n_probe))
 
 
+def test_multi_query_fetches_cold_ids_in_one_job(spark):
+    """With centroid state warm, building a multi-query plan costs ONE
+    job however many query ids are cold (one batched vector fetch), and
+    its probe pairs match the per-id driver rule."""
+    import uuid
+
+    from gpu_accelerated_vector_indexing_spark.operators import ivf
+
+    ids = (5, 8, 13, 21)
+    ivf.multi_query_knn_ivf(spark, SF_CORRECT, (0,), k=5, n_probe=3)  # warm centroids
+    for q in ids:
+        ivf._QVEC_CACHE.pop((spark, SF_CORRECT, q), None)
+    sc = spark.sparkContext
+    group = f"multi-query-{uuid.uuid4()}"
+    sc.setJobGroup(group, "multi-query construction")
+    try:
+        df = ivf.multi_query_knn_ivf(spark, SF_CORRECT, ids, k=5, n_probe=3)
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    rows = df.collect()
+    assert sorted({r.query_id for r in rows}) == list(ids)
+    for q in ids:
+        want = ivf.knn_ivf(spark, SF_CORRECT, query_id=q, k=5, n_probe=3).collect()
+        got = sorted((r for r in rows if r.query_id == q), key=lambda r: r.rn)
+        assert [(r.vec_id, r.score) for r in got] == [(r.vec_id, r.score) for r in want]
+
+
 def test_append_to_index_searchable_without_rebuild(spark, tmp_path):
     """Continuous-ingest contract: vectors appended to an existing
     index (nearest-centroid assignment, partition-directory append)

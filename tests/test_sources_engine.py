@@ -333,6 +333,78 @@ def test_engine_flag_validation():
     SearchConfig(mode="Atomic", threadsperBlock=1024).validate()  # reference-legal
 
 
+def test_engine_coarse_matches_dataframe_rule(spark, built_index):
+    """The engine's driver-side coarse search selects the SAME probe
+    list (order included) as the DataFrame rule — ``ivf.coarse_search``
+    over the engine's centroid table — for several queries × n_probe."""
+    from gpu_accelerated_vector_indexing_spark.engine import IVFEngine
+    from gpu_accelerated_vector_indexing_spark.operators.ivf import coarse_search
+    from gpu_accelerated_vector_indexing_spark.operators.knn import query_vectors
+
+    eng = IVFEngine.from_pretrained(spark, built_index, n_probe=4)
+    cents = eng.centroids.withColumnRenamed("cluster", "label")
+    for qid in (0, 3, 17, 42):
+        q = query_vectors(spark, SF_SMOKE, [qid])
+        for n_probe in (1, 2, 4):
+            want = [
+                r.label
+                for r in coarse_search(cents, q, n_probe)
+                .orderBy("rn")
+                .select("label")
+                .collect()
+            ]
+            got = eng._coarse(_query_vec(spark, SF_SMOKE, qid), n_probe)
+            assert got == want, (qid, n_probe)
+
+
+def test_engine_search_runs_no_job_before_collect(spark, built_index):
+    """Centroids load once per engine: building a search plan launches
+    zero Spark jobs — only the caller's action runs any."""
+    import uuid
+
+    from gpu_accelerated_vector_indexing_spark.engine import IVFEngine
+
+    qvec = _query_vec(spark, SF_SMOKE)
+    eng = IVFEngine.from_pretrained(spark, built_index, n_probe=2)
+    sc = spark.sparkContext
+    group = f"engine-search-{uuid.uuid4()}"
+    sc.setJobGroup(group, "engine search construction")
+    try:
+        df = eng.search(qvec, k=5)
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert len(df.collect()) == 5
+
+
+@pytest.mark.parametrize(
+    "bad",
+    [
+        pytest.param(lambda q: [float("nan")] + q[1:], id="nan"),
+        pytest.param(lambda q: q[:-1] + [float("inf")], id="inf"),
+        pytest.param(lambda q: q[:-1], id="short"),
+        pytest.param(lambda q: q + [0.0], id="long"),
+    ],
+)
+def test_engine_rejects_malformed_query(spark, built_index, bad):
+    """A non-finite or wrong-length query fails loudly, before any job."""
+    import uuid
+
+    from gpu_accelerated_vector_indexing_spark.engine import IVFEngine
+
+    qvec = bad(_query_vec(spark, SF_SMOKE))
+    eng = IVFEngine.from_pretrained(spark, built_index, n_probe=2)
+    sc = spark.sparkContext
+    group = f"engine-bad-query-{uuid.uuid4()}"
+    sc.setJobGroup(group, "malformed query")
+    try:
+        with pytest.raises(ValueError, match="non-finite|components"):
+            eng.search(qvec, k=5)
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
 def test_engine_search_with_docs(spark, built_index):
     from gpu_accelerated_vector_indexing_spark.engine import IVFEngine
     from gpu_accelerated_vector_indexing_spark.sources.fixtures import load_table
